@@ -30,7 +30,12 @@ def persist_bounded(slot: str, df: DataFrame) -> DataFrame:
         key = id(df)
     prev = _LAST_PERSISTED.get(slot)
     if prev is not None and prev[0] != key:
-        prev[1].unpersist(blocking=False)
+        try:
+            prev[1].unpersist(blocking=False)
+        except Exception:
+            # the slot may hold a relation of a stopped session; it must
+            # not fail the next query -- the slot is overwritten below
+            pass
     out = df.persist()
     _LAST_PERSISTED[slot] = (key, out)
     return out

@@ -148,7 +148,9 @@ def prune_files(
     stats: DataFrame, column: str, lo: float, hi: float
 ) -> list[str]:
     """Files whose [min, max] range for `column` overlaps [lo, hi]. Files
-    with no stats row for the column are kept (unknown => cannot skip).
+    with no stats row for the column, or a row with a null bound, are kept
+    (unknown => cannot skip; the residual filter in skipping_scan makes
+    keeping always safe).
 
     ONE collect of the (tiny, files x columns) index instead of three
     separate jobs -- an unpersisted stats relation used to re-run its
@@ -157,21 +159,15 @@ def prune_files(
     rows = stats.select("file", "column", "min_val", "max_val").collect()
     all_files = {r["file"] for r in rows}
     with_stats = {r["file"] for r in rows if r["column"] == column}
-    # both bounds guarded: a half-known range (one of min/max null --
-    # possible from a hand-built or merged stats source even though the
-    # footer reader sets both together) must behave like the old
-    # NULL-propagating SQL predicate: not provably overlapping => the
-    # file is NOT in `overlapping`, but it IS in `with_stats`, so it is
-    # pruned -- conservative would be keep; matching the original SQL
-    # exactly is what the oracle equivalence was proven against
     overlapping = {
         r["file"]
         for r in rows
         if r["column"] == column
-        and r["max_val"] is not None
-        and r["min_val"] is not None
-        and r["max_val"] >= lo
-        and r["min_val"] <= hi
+        and (
+            r["max_val"] is None
+            or r["min_val"] is None
+            or (r["max_val"] >= lo and r["min_val"] <= hi)
+        )
     }
     return sorted((all_files - with_stats) | overlapping)
 

@@ -1456,7 +1456,8 @@ def hudi_compact(spark: SparkSession, table: str,
 #: (~70-100 ms of driver-side JVM work per read at fixture scale). This
 #: caches METADATA only, never data or results; the stat validation keeps
 #: it correct even under restore-style timeline rewrites. Same discipline
-#: as loader._events_ts_kind. Bounded LRU.
+#: as loader._events_ts_kind. Bounded FIFO: a full cache evicts the
+#: oldest-inserted entry; hits do not refresh it.
 _BASE_SCHEMA_CACHE: dict[tuple, tuple] = {}
 
 

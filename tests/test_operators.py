@@ -106,25 +106,31 @@ def test_minhash_lsh_recall_and_precision(spark):
         assert recall >= 0.5, f"LSH recall too low: {recall}"
 
 
-def test_minhash_inrow_pipeline_matches_grouped(spark):
-    """The candidate-verify in-row pipeline (bench/declared default) must
-    produce the exact pair set of the grouped-shuffle pipeline -- same
-    signature constants, same banding, so same candidates; verification is
-    exact either way."""
-    from hive_person_service_spark.operators.dedup import (
-        near_duplicates_minhash_inrow,
-    )
+def test_lsh_bands_key_on_raw_slot_tuple(spark):
+    # 8 slots in 2 bands of 4: a candidate means "every slot of SOME band
+    # is equal" -- no more (a near-miss in each band is not enough), no
+    # less (one fully equal band is).
+    from hive_person_service_spark.operators.dedup import lsh_candidate_pairs
 
-    docs = load_table(spark, SF_SMALL, "documents")
-    grouped = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in near_duplicates_minhash(docs, threshold=0.7).collect()
+    sigs = spark.createDataFrame(
+        [
+            (1, 1, 2, 3, 4, 5, 6, 7, 8),
+            (2, 1, 2, 3, 4, 9, 9, 9, 9),  # band 0 equal to doc 1
+            (3, 1, 2, 3, 0, 5, 6, 7, 0),  # one slot off in each band of doc 1
+        ],
+        "doc_id long, " + ", ".join(f"sig_{j} long" for j in range(8)),
+    )
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in lsh_candidate_pairs(sigs, num_perm=8, bands=2).collect()
     }
-    inrow = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in near_duplicates_minhash_inrow(docs, threshold=0.7).collect()
-    }
-    assert inrow == grouped
+    assert pairs == {(1, 2)}
+
+
+def test_minhash_unknown_base_hash_raises(spark):
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="base_hash"):
+        near_duplicates_minhash(docs, base_hash="sha1")
 
 
 def test_simhash_identical_texts_equal_signatures(spark):
@@ -513,19 +519,17 @@ def test_spark_hashes_deterministic(spark):
 
 
 def test_minhash_md5_pipeline_recall_and_precision(spark):
-    """The engine-reproducible md5-LSH pipeline (the oracle-checked
-    dedup_near) keeps the LSH contract: verified pairs are a SUBSET of
-    brute-force truth (precision exact by construction) with usable
-    recall. Exact agreement with the DuckDB replay is covered by the
-    declared oracle; this pins the statistical contract independently."""
-    from hive_person_service_spark.operators.dedup import (
-        near_duplicates_minhash_md5,
-    )
-
+    """The md5 base hash (the oracle-checked dedup_near) keeps the LSH
+    contract: verified pairs are a SUBSET of brute-force truth (precision
+    exact by construction) with usable recall. Exact agreement with the
+    DuckDB replay is covered by the declared oracle; this pins the
+    statistical contract independently."""
     docs = load_table(spark, SF_SMALL, "documents")
     found = {
         (r.id_a, r.id_b): r.jaccard
-        for r in near_duplicates_minhash_md5(docs, threshold=0.7).collect()
+        for r in near_duplicates_minhash(
+            docs, threshold=0.7, base_hash="md5"
+        ).collect()
     }
     shingled = doc_shingles(docs, n=3)
     cand = (

@@ -83,6 +83,33 @@ def test_persist_bounded_swaps_on_plan_change(spark):
     _LAST_PERSISTED.clear()
 
 
+def test_persist_bounded_survives_failing_unpersist(spark, monkeypatch):
+    # A slot may hold a relation of a stopped session whose unpersist
+    # raises; the next query must still persist and take the slot.
+    from hive_person_service_spark.operators.caching import (
+        _LAST_PERSISTED,
+        persist_bounded,
+    )
+
+    spark.catalog.clearCache()
+    _LAST_PERSISTED.clear()
+    stale = persist_bounded("t_slot", spark.range(10).select(F.col("id")))
+
+    def boom(self, blocking=False):
+        raise RuntimeError("session stopped")
+
+    monkeypatch.setattr(type(stale), "unpersist", boom)
+    fresh = persist_bounded("t_slot", spark.range(30).select(F.col("id")))
+    monkeypatch.undo()
+    assert _LAST_PERSISTED["t_slot"][1] is fresh
+    assert fresh.storageLevel.useMemory
+    assert fresh.count() == 30
+
+    stale.unpersist()
+    spark.catalog.clearCache()
+    _LAST_PERSISTED.clear()
+
+
 def test_pagerank_releases_loop_caches(spark):
     from hive_person_service_spark.operators.graph import pagerank
 

@@ -93,54 +93,6 @@ def test_stream_cms_equals_batch(spark, tmp_path):
     assert streamed == batch
 
 
-def test_minhash_inrow_equals_grouped(spark):
-    # Zero-shuffle in-row signatures must be bit-identical to the
-    # explode+groupBy signatures (same constants, same arithmetic).
-    from hive_person_service_spark.operators.dedup import (
-        doc_shingles,
-        minhash_signatures,
-        minhash_signatures_inrow,
-    )
-    from hive_person_service_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    grouped = minhash_signatures(doc_shingles(docs)).orderBy("doc_id").collect()
-    inrow = minhash_signatures_inrow(docs).orderBy("doc_id").collect()
-    assert grouped == inrow
-
-
-def test_minhash_inrow_vec_equals_expression_fold(spark):
-    # xxhash64 variant of the vectorized fold (used by dedup_cluster via
-    # near_duplicates_minhash_inrow): bit-identical to the expression fold.
-    from hive_person_service_spark.operators.dedup import (
-        minhash_signatures_inrow,
-        minhash_signatures_inrow_vec,
-    )
-    from hive_person_service_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    expr = minhash_signatures_inrow(docs).orderBy("doc_id").collect()
-    vec = minhash_signatures_inrow_vec(docs).orderBy("doc_id").collect()
-    assert expr == vec
-
-
-def test_minhash_md5_vec_equals_expression_fold(spark):
-    # The vectorized (numpy mapInArrow) permutation fold must be
-    # bit-identical to the JVM expression fold: same md5 base hashes,
-    # same (a, b) constants, same mod arithmetic -- only the execution
-    # strategy differs (r11 optimization round).
-    from hive_person_service_spark.operators.dedup import (
-        minhash_signatures_inrow_md5,
-        minhash_signatures_inrow_md5_vec,
-    )
-    from hive_person_service_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    expr = minhash_signatures_inrow_md5(docs).orderBy("doc_id").collect()
-    vec = minhash_signatures_inrow_md5_vec(docs).orderBy("doc_id").collect()
-    assert expr == vec
-
-
 def test_prefix_join_equals_full_join_and_prunes(spark):
     # Prefix filtering is exact (the prefix lemma guarantees recall) and
     # must generate strictly fewer candidates than the full inverted index.
@@ -179,19 +131,3 @@ def test_prefix_join_equals_full_join_and_prunes(spark):
         .count()
     )
     assert n_prefix < n_full / 2, (n_prefix, n_full)
-
-
-def test_minhash_fold_slab_chunking_bit_identical(spark, monkeypatch):
-    # r12 (advisor item): the vectorized fold bounds its numpy
-    # temporaries by slabbing the (hashes x num_perm) product matrix.
-    # Shrink the slab far below one fixture batch so BOTH chunked paths
-    # run (multi-row slabs AND the single-giant-row running-min), and pin
-    # bit-equality against the unchunked fold's output.
-    from hive_person_service_spark.operators import dedup as D
-    from hive_person_service_spark.sources import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    baseline = D.minhash_signatures_inrow_md5_vec(docs).orderBy("doc_id").collect()
-    monkeypatch.setattr(D, "_FOLD_SLAB", 64)  # < one doc's shingle count
-    chunked = D.minhash_signatures_inrow_md5_vec(docs).orderBy("doc_id").collect()
-    assert chunked == baseline

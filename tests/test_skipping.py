@@ -149,14 +149,14 @@ def test_refresh_stats_index_incremental(spark, tmp_path):
 
 
 def test_prune_files_partial_stats_row_no_crash(spark):
-    # r12 (advisor item): a stats row with exactly one known bound must
-    # behave like the old NULL-propagating SQL predicate (not provably
-    # overlapping -> prunable), never raise.
+    # A stats row with a null bound is unknown => cannot skip: the file is
+    # kept (never raises); only a fully known, disjoint range prunes.
     from hive_person_service_spark.operators.skipping import prune_files
 
     stats = spark.createDataFrame(
         [
             ("f_both", "c", 0.0, 10.0),
+            ("f_disjoint", "c", 20.0, 30.0),
             ("f_max_only", "c", None, 10.0),
             ("f_min_only", "c", 0.0, None),
             ("f_unknown", "c", None, None),
@@ -165,7 +165,25 @@ def test_prune_files_partial_stats_row_no_crash(spark):
         "file string, column string, min_val double, max_val double",
     )
     keep = prune_files(stats, "c", 5.0, 6.0)
-    # f_both overlaps; partial/unknown ranges are not provably
-    # overlapping (old SQL semantics); the no-stats-for-column file is
-    # kept (unknown => cannot skip)
-    assert keep == ["f_both", "f_other_col"]
+    assert keep == ["f_both", "f_max_only", "f_min_only", "f_other_col", "f_unknown"]
+
+
+def test_skipping_scan_keeps_file_with_null_min(spark, sorted_layout):
+    # A hand-built stats row whose min_val is null must not drop the
+    # file's matching rows: the half-known range keeps the file and the
+    # residual filter does the rest.
+    stats = build_stats_index(spark, sorted_layout, ["o_totalprice"])
+    lo, hi = 50_000.0, 80_000.0
+    hit = prune_files(stats, "o_totalprice", lo, hi)[0]
+    stats = stats.withColumn(
+        "min_val",
+        F.when(F.col("file") == hit, F.lit(None).cast("double")).otherwise(
+            F.col("min_val")
+        ),
+    ).cache()
+    assert hit in prune_files(stats, "o_totalprice", lo, hi)
+    full = spark.read.parquet(sorted_layout)
+    expected = full.where(F.col("o_totalprice").between(lo, hi))
+    got = skipping_scan(spark, sorted_layout, stats, "o_totalprice", lo, hi)
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0

@@ -4,7 +4,7 @@ iterative queries whose meaningful cost is per-round job count, not the
 final (trivial) physical plan.
 
 Usage: python tools/count_jobs.py <query> [query ...]
-Env: SPARK_GRAFT_REPO (default /root/repo), SPARK_GRAFT_SF_DIR.
+Env: SPARK_GRAFT_SF_DIR.
 
 Prints one line per query: name, jobs during build, jobs during collect,
 wall seconds. Uses the public StatusTracker API (job ids are monotonically
@@ -17,7 +17,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.environ.get("SPARK_GRAFT_REPO", "/root/repo"))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

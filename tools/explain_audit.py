@@ -35,7 +35,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("SPARK_GRAFT_AUDIT_SF", "/root/testdata/sf0.01")
 BASELINE_PATH = os.path.join(os.path.dirname(__file__), "..", "EXPLAIN_BASELINE.json")

@@ -51,13 +51,14 @@ from __future__ import annotations
 
 import json
 import random
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.selfcheck import compare  # same comparator as the driver gate
 

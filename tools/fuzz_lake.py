@@ -43,7 +43,7 @@ import tempfile
 import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SCHEMA = "id long, grp string, v double"
 

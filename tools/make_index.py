@@ -4,7 +4,7 @@ Registry-driven, so it can't drift from the code: name, defining
 module:line, family (name prefix), check type (oracle vs rows-only),
 first docstring line.
 
-Usage: python tools/make_index.py   (rewrites /root/repo/INDEX.md)
+Usage: python tools/make_index.py   (rewrites INDEX.md at the repo root)
 """
 
 from __future__ import annotations
@@ -13,7 +13,8 @@ import sys
 from collections import Counter
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> int:
@@ -37,7 +38,7 @@ def main() -> int:
     fam_counts = Counter(r[3] for r in rows)
     check_counts = Counter(r[4] for r in rows)
 
-    out = Path("/root/repo/INDEX.md")
+    out = ROOT / "INDEX.md"
     with out.open("w") as fh:
         fh.write(
             "# INDEX — declared query registry "

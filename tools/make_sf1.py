@@ -19,10 +19,11 @@ Usage: python tools/make_sf1.py [src_sf_dir] [out_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 C_OFF = 10_000_000  # custkey / user_id
 O_OFF = 100_000_000  # orderkey

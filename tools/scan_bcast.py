@@ -4,9 +4,10 @@ Used to pin the round-11 no-forced-corpus-broadcast invariant."""
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_person_service_spark.session import get_spark  # noqa: E402
 from hive_person_service_spark import plans  # noqa: E402

@@ -13,6 +13,7 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -103,15 +104,13 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from hive_person_service_spark.session import get_spark
 
     spark = get_spark(app_name="selfcheck")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-
-    import os
 
     con = duckdb.connect()
     for t in (
