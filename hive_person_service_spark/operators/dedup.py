@@ -6,12 +6,14 @@ generation is banding + an equi-join on the band key -- join fan-out is
 bounded by bucket sizes -- and only candidates pay the exact-Jaccard
 verification.
 
-There is ONE near-dup pipeline, near_duplicates_minhash: shingle once
-into a persisted relation, grouped MinHash signatures, raw-tuple LSH
-banding, exact-Jaccard verify. Its ``base_hash`` picks the per-shingle
-base hash: xxhash64 (the engine default) or md5, which any engine can
-replay -- the DuckDB oracle of the declared dedup_near re-runs the whole
-pipeline from it.
+There is ONE near-dup pipeline, near_duplicates_minhash: one persisted
+row of distinct shingles per document, grouped MinHash signatures over
+its explode, raw-tuple LSH banding, exact Jaccard of each candidate's two
+shingle arrays, and the verified pairs persisted for the caller's next
+step (dedup groups read them instead of re-running the pipeline). Its
+``base_hash`` picks the per-shingle base hash: xxhash64 (the engine
+default) or md5, which any engine can replay -- the DuckDB oracle of the
+declared dedup_near re-runs the whole pipeline from it.
 """
 
 from __future__ import annotations
@@ -166,6 +168,30 @@ def verify_jaccard(
     )
 
 
+def _shingle_sets(df: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, sh): one row per document, sh = its distinct word n-gram
+    shingles as an array -- the per-document form of doc_shingles."""
+    return df.select("doc_id", shingles_expr(tokens_expr(), n).alias("sh"))
+
+
+def _verify_sets(candidates: DataFrame, sets: DataFrame) -> DataFrame:
+    """verify_jaccard over per-document shingle arrays: two joins on the
+    ids (one row per candidate each) instead of a join per shared shingle
+    plus a per-document count. The arrays are distinct, so the
+    intersection size is the shared-shingle count; pairs sharing nothing
+    are dropped, as the shingle join drops them."""
+    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sa"))
+    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sb"))
+    inter = F.size(F.array_intersect("sa", "sb"))
+    union = F.size("sa") + F.size("sb") - inter
+    return (
+        candidates.join(sa, "id_a")
+        .join(sb, "id_b")
+        .where(inter > 0)
+        .select("id_a", "id_b", F.round(inter / union, 6).alias("jaccard"))
+    )
+
+
 def near_duplicates_minhash(
     df: DataFrame,
     threshold: float = 0.7,
@@ -175,22 +201,24 @@ def near_duplicates_minhash(
     base_hash: str = "xxhash64",
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs (id_a < id_b, jaccard >= threshold):
-    shingle -> grouped minhash -> raw-tuple banding -> bucket-join ->
+    shingle sets -> grouped minhash -> raw-tuple banding -> bucket-join ->
     exact-Jaccard verify -> threshold filter.
 
     ``base_hash`` is "xxhash64" (default: one JVM hash call per shingle)
     or "md5" (replayable by other engines; the oracle-checked dedup_near
     uses it). Anything else raises ValueError.
 
-    The shingle relation feeds three consumers (signatures + both sides of
-    the verify join), so it is shingled ONCE and persisted -- without it
-    Spark re-scans and re-shingles the corpus per consumer. At 100 TB the
-    same role is played by materializing shingles to a parquet staging
-    table. Why grouped signatures and not an in-row (zero-shuffle) fold
-    with candidate-only verification: the verify join needs the shingle
-    relation anyway, and on the benchmark's llm_curation pass
-    (perfbench/, traced seed 7) the grouped form runs 69 Spark jobs per
-    pass against 98 for the in-row form."""
+    Two relations are persisted, one slot each. ``minhash_sets`` holds one
+    row per document with its shingle array: the signatures explode it,
+    and verification reads each candidate's two arrays through id joins,
+    so the corpus is scanned and shingled once and no shingle-level join
+    runs. ``minhash_pairs`` holds the verified pairs, so a caller that
+    collects them and then builds dedup groups from them runs the
+    pipeline once. At 100 TB both roles are played by parquet staging
+    tables. On the benchmark's llm_curation pass (perfbench/, traced seed
+    7) this operator runs 14 Spark jobs and the dedup groups over its
+    pairs 13, against 19 and 26 with a shingle-level verify join and
+    groups that re-ran the pipeline."""
     _base_hash(base_hash)
     # Documents with fewer than shingle_n tokens have no shingles, so
     # dropping them changes nothing -- and IsNotNull(text) reaches the scan.
@@ -200,10 +228,12 @@ def near_duplicates_minhash(
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
-    shingled = _persist_bounded("minhash_shingled", doc_shingles(df, n=shingle_n))
+    sets = _persist_bounded("minhash_sets", _shingle_sets(df, n=shingle_n))
+    shingled = sets.select("doc_id", F.explode("sh").alias("shingle"))
     sigs = minhash_signatures(shingled, num_perm=num_perm, base_hash=base_hash)
     cands = lsh_candidate_pairs(sigs, num_perm=num_perm, bands=bands)
-    return verify_jaccard(cands, shingled).where(F.col("jaccard") >= threshold)
+    pairs = _verify_sets(cands, sets).where(F.col("jaccard") >= threshold)
+    return _persist_bounded("minhash_pairs", pairs)
 
 
 def near_duplicates_incremental(

@@ -34,6 +34,13 @@ def test_dedup_groups_keep_canonical(spark):
     assert out[1] == (1, True) and out[2] == (2, True) and out[4] == (4, True)
 
 
+def test_dedup_groups_without_pairs_is_identity(spark):
+    docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    out = sorted(map(tuple, dedup_groups(docs, pairs).collect()))
+    assert out == [(i, i, True) for i in range(4)]
+
+
 def test_dedup_groups_on_real_near_dups(spark):
     """sf0.1 documents have real exact dups; near-dup pairs at >=0.9 must
     collapse them into groups whose members share identical text."""

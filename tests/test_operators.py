@@ -133,6 +133,57 @@ def test_minhash_unknown_base_hash_raises(spark):
         near_duplicates_minhash(docs, base_hash="sha1")
 
 
+def test_set_verify_equals_shingle_join_verify(spark):
+    # per-document shingle arrays give the same (id_a, id_b, jaccard) as
+    # the shingle-level join, for every candidate pair: repeated tokens
+    # (repeated shingles collapse to a set), a doc with fewer than 3
+    # tokens (no shingles, so no pairs), identical texts (jaccard 1.0)
+    # and a pair sharing nothing (dropped by both)
+    from itertools import combinations
+
+    from hive_person_service_spark.operators.dedup import _shingle_sets, _verify_sets
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c a b c a b c d"),
+            (2, "a b c a b c e"),
+            (3, "x y"),
+            (4, "the quick brown fox jumps"),
+            (5, "the quick brown fox jumps"),
+            (6, "the quick brown dog jumps"),
+            (7, "p q r s"),
+            (8, "a b"),
+        ],
+        "doc_id long, text string",
+    )
+    cands = spark.createDataFrame(
+        list(combinations(range(1, 9), 2)), "id_a long, id_b long"
+    )
+    by_join = sorted(map(tuple, verify_jaccard(cands, doc_shingles(docs)).collect()))
+    by_sets = sorted(map(tuple, _verify_sets(cands, _shingle_sets(docs)).collect()))
+    assert by_sets == by_join
+    assert (4, 5, 1.0) in by_sets and (1, 2, 0.6) in by_sets
+    assert not {3, 7, 8} & {i for p in by_sets for i in p[:2]}
+
+
+def test_minhash_keeps_one_relation_per_slot(spark):
+    # a pass persists per-document shingle sets and the verified pairs;
+    # a second pass over another sample replaces both, leaving one each
+    from hive_person_service_spark.operators import caching
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    first = near_duplicates_minhash(docs.where(F.col("doc_id") % 2 == 0))
+    first.collect()
+    sets_1 = caching._LAST_PERSISTED["minhash_sets"][1]
+    second = near_duplicates_minhash(docs.where(F.col("doc_id") % 3 == 0))
+    second.collect()
+    assert caching._LAST_PERSISTED["minhash_pairs"][1] is second
+    assert caching._LAST_PERSISTED["minhash_sets"][1] is not sets_1
+    assert not first.storageLevel.useMemory and not sets_1.storageLevel.useMemory
+    assert second.storageLevel.useMemory
+    assert "minhash_shingled" not in caching._LAST_PERSISTED
+
+
 def test_simhash_identical_texts_equal_signatures(spark):
     df = spark.createDataFrame(
         [(1, "spark join window filter"), (2, "spark join window filter"),
